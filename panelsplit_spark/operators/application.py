@@ -342,15 +342,10 @@ def cross_val_fit(
     if fast is not None:
         return fast
 
-    needed = list(feature_cols)
-    for c in (y_col, sample_weight_col):
-        if c is not None and c not in needed:
-            needed.append(c)
-    needed.append(cv.period_col) if cv.period_col not in needed else None
-    if cv.snapshot_col and cv.snapshot_col not in needed:
-        needed.append(cv.snapshot_col)
-
-    assigned = cv.assign(df.select(*needed), roles=("train",))
+    cols = [
+        c for c in (*feature_cols, y_col, sample_weight_col) if c is not None
+    ]
+    assigned = cv.assign(df, roles=("train",), cols=cols)
     fit_fn = _make_fit_fn(
         estimator, feature_cols, y_col, sample_weight_col, drop_na_in_y,
         use_weight,
@@ -410,13 +405,9 @@ def cross_val_predict(
             else "double"
         )
     keep = list(keep_cols) if keep_cols is not None else list(df.columns)
-    needed = list(dict.fromkeys(list(keep) + list(feature_cols)))
-    if cv.period_col not in needed:
-        needed.append(cv.period_col)
-    if cv.snapshot_col and cv.snapshot_col not in needed:
-        needed.append(cv.snapshot_col)
-
-    assigned = cv.assign(df.select(*needed), roles=(return_group,))
+    assigned = cv.assign(
+        df, roles=(return_group,), cols=[*keep, *feature_cols]
+    )
 
     # Closed-form family + plain predict → broadcast-joined coefficient
     # frame + arithmetic projection: the whole OOF pass stays in

@@ -135,17 +135,7 @@ class PanelSplit:
         if unique_periods is None:
             if df is None:
                 raise ValueError("provide either df or unique_periods")
-            # O(|distinct periods|) driver collect — #periods ≪ #rows.
-            # Partial aggregation happens map-side; only distinct values
-            # cross the wire.
-            rows = (
-                df.select(F.col(period_col).alias("p"))
-                .where(F.col(period_col).isNotNull())
-                .distinct()
-                .orderBy("p")
-                .collect()
-            )
-            unique_periods = [r["p"] for r in rows]
+            unique_periods = _sorted_periods(df, period_col)
         snapshot_min = None
         if snapshot_col is not None:
             if df is None:
@@ -178,7 +168,6 @@ class PanelSplit:
         cls,
         folds: Sequence[Tuple[Sequence[Any], Sequence[Any]]],
         period_col: str = "period",
-        snapshot_col: Optional[str] = None,
         scan_col: Optional[str] = None,
         period_bounds: Optional[Callable[[Any], Tuple[Any, Any]]] = None,
     ) -> "PanelSplit":
@@ -187,12 +176,13 @@ class PanelSplit:
         raw split lists anywhere a splitter goes
         (utils/validation.py:218-227). Arbitrary (even non-contiguous)
         period sets are supported; predicates fall back to per-value
-        ranges."""
+        ranges. Literal folds carry no snapshot value, so there is no
+        snapshot selection here."""
         from ..plans.fold_spec import Fold, FoldSpec
 
         ps = cls.__new__(cls)
         ps.period_col = period_col
-        ps.snapshot_col = snapshot_col
+        ps.snapshot_col = None
         ps.scan_col = scan_col
         ps.period_bounds = period_bounds
         all_periods = sorted(
@@ -306,15 +296,25 @@ class PanelSplit:
         return self.spec.spec_df(spark)
 
     def assign(
-        self, df: DataFrame, roles: Tuple[str, ...] = ("train", "test")
+        self,
+        df: DataFrame,
+        roles: Tuple[str, ...] = ("train", "test"),
+        cols: Optional[Sequence[str]] = None,
     ) -> DataFrame:
         """Fan-out: one row per (data row, fold membership).
 
         Implemented as a **broadcast hash join** against the driver-small
         fold-spec table — a single pass over the data, no shuffle of the
-        big side, regardless of n_splits. Output columns = df's +
+        big side, regardless of n_splits. Output columns = df's (or, with
+        ``cols``, only those plus the period and snapshot columns the join
+        needs — the column pruning every fit/predict pass relies on) +
         ``fold_id`` + ``role``.
         """
+        if cols is not None:
+            keys = [self.period_col] + (
+                [self.snapshot_col] if self.snapshot_col else []
+            )
+            df = df.select(*dict.fromkeys([*cols, *keys]))
         spec = (
             self.spec.spec_df(df.sparkSession)
             .withColumnRenamed("period", "__fold_period")
@@ -478,6 +478,36 @@ def _print_drop(i: int) -> None:
     )
 
 
+def _sorted_periods(df: DataFrame, period_col: str) -> List[Any]:
+    """Sorted distinct non-NULL periods: an O(|distinct periods|) driver
+    collect — #periods ≪ #rows. Partial aggregation happens map-side;
+    only distinct values cross the wire."""
+    return [
+        r["p"]
+        for r in df.where(F.col(period_col).isNotNull())
+        .select(F.col(period_col).alias("p"))
+        .distinct()
+        .orderBy("p")
+        .collect()
+    ]
+
+
+def _period_fan_out(
+    df: DataFrame, period_col: str, rows: list, id_col: str
+) -> DataFrame:
+    """One broadcast hash join of ``df`` against a driver-small
+    ``(id_col, role, period)`` membership table: one output row per
+    (data row, membership), no shuffle of the fact side."""
+    spec = df.sparkSession.createDataFrame(
+        rows, [id_col, "role", "__fold_period"]
+    )
+    return df.join(
+        F.broadcast(spec),
+        df[period_col] == spec["__fold_period"],
+        "inner",
+    ).drop("__fold_period")
+
+
 def purged_panel_assign(
     df,
     period_col: str,
@@ -502,14 +532,7 @@ def purged_panel_assign(
     folds×periods rows, and the fan-out is a single BROADCAST hash
     join: one pass over the data, no shuffle of the big side.
     """
-    periods = [
-        r[0]
-        for r in df.select(period_col)
-        .where(F.col(period_col).isNotNull())
-        .distinct()
-        .orderBy(period_col)
-        .collect()
-    ]
+    periods = _sorted_periods(df, period_col)
     bounds = purged_kfold_bounds(len(periods), n_splits, purge, embargo)
     rows = []
     for i, (tlo, thi, xlo, xhi) in enumerate(bounds):
@@ -518,14 +541,7 @@ def purged_panel_assign(
                 rows.append((i, "test", p))
             elif rk < xlo or rk >= xhi:
                 rows.append((i, "train", p))
-    spec = df.sparkSession.createDataFrame(
-        rows, ["fold_id", "role", "__fold_period"]
-    )
-    return df.join(
-        F.broadcast(spec),
-        df[period_col] == spec["__fold_period"],
-        "inner",
-    ).drop("__fold_period")
+    return _period_fan_out(df, period_col, rows, "fold_id")
 
 
 def cpcv_panel_assign(
@@ -550,14 +566,7 @@ def cpcv_panel_assign(
     """
     from ..plans.fold_spec import cpcv_splits
 
-    periods = [
-        r[0]
-        for r in df.select(period_col)
-        .where(F.col(period_col).isNotNull())
-        .distinct()
-        .orderBy(period_col)
-        .collect()
-    ]
+    periods = _sorted_periods(df, period_col)
     n = len(periods)
     splits = cpcv_splits(n, n_groups, n_test_groups, purge, embargo)
     rows = []
@@ -571,14 +580,7 @@ def cpcv_panel_assign(
                 rows.append((sid, "test", p))
             elif not any(lo <= rk < hi for lo, hi in excl):
                 rows.append((sid, "train", p))
-    spec = df.sparkSession.createDataFrame(
-        rows, ["split_id", "role", "__fold_period"]
-    )
-    return df.join(
-        F.broadcast(spec),
-        df[period_col] == spec["__fold_period"],
-        "inner",
-    ).drop("__fold_period")
+    return _period_fan_out(df, period_col, rows, "split_id")
 
 
 def cpcv_backtest_paths(
@@ -662,14 +664,7 @@ def cpcv_backtest_paths(
     )
 
     # group of each period rank, replayed from the SAME split geometry
-    periods = [
-        r[0]
-        for r in df.select(period_col)
-        .where(F.col(period_col).isNotNull())
-        .distinct()
-        .orderBy(period_col)
-        .collect()
-    ]
+    periods = _sorted_periods(df, period_col)
     n = len(periods)
     q, r = divmod(n, n_groups)
     grp_rows = []

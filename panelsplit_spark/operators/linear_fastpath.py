@@ -12,8 +12,8 @@ collapses to ONE distributed aggregation:
 i.e. map-side partial aggregation over however many partitions the fold
 spans (no fold-sized task anywhere), a shuffle of a few dozen doubles per
 fold, and an O(d³) driver-side solve. Prediction similarly needs no
-Python: per-fold coefficients fold into a literal CASE expression, so the
-whole OOF pass stays inside whole-stage codegen.
+Python: per-fold coefficients travel as a tiny broadcast-joined frame, so
+the whole OOF pass stays inside whole-stage codegen at any fold count.
 
 The produced models are ordinary estimator objects (coef_/intercept_/
 mean_ set), indistinguishable from pandas-path fits to downstream code.
@@ -42,16 +42,15 @@ __all__ = ["suffstats_fit", "linear_predict_frame", "sweep_scores", "logistic_ir
 # NOT of the estimator's hyper-parameters. A hyper-parameter search over
 # the closed-form family therefore needs exactly ONE distributed
 # aggregate: every candidate resolves from the cached moments with an
-# O(d³) driver solve. Two-level weak keying (df, then cv) scopes cache
-# lifetime to the objects themselves; the lock makes concurrent candidate
-# threads (BaseSearch n_jobs) compute the aggregate once and share it.
+# O(d³) driver solve. The df is weakly keyed, so cache lifetime follows
+# the data frame; the folds are keyed by CONTENT (see ``_cached_moments``);
+# the lock makes concurrent candidate threads (BaseSearch n_jobs) compute
+# the aggregate once and share it.
 _MOMENT_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _CACHE_LOCK = threading.Lock()
 
 #: fast path covers at most this many features (d² aggregate columns)
 _MAX_FEATURES = 16
-#: ...and at most this many folds for the literal predict expression
-_MAX_FOLDS_FOR_EXPR = 64
 
 
 def _eligible_fit(estimator: Any) -> bool:
@@ -86,15 +85,10 @@ def _fold_moments(
 ) -> dict:
     """One grouped aggregate: per-fold (Σw, Σwy, Σwxᵢ, Σwxᵢy, Σwxᵢxⱼ,
     any-null flag), collected to a tiny driver dict."""
-    needed = list(dict.fromkeys(feats + [y_col]))
+    cols = feats + [y_col]
     if sample_weight_col is not None:
-        needed.append(sample_weight_col)
-    if cv.period_col not in needed:
-        needed.append(cv.period_col)
-    if cv.snapshot_col and cv.snapshot_col not in needed:
-        needed.append(cv.snapshot_col)
-
-    assigned = cv.assign(df.select(*needed), roles=("train",))
+        cols.append(sample_weight_col)
+    assigned = cv.assign(df, roles=("train",), cols=cols)
     if drop_na_in_y:
         assigned = assigned.where(F.col(y_col).isNotNull())
 
@@ -135,6 +129,47 @@ def _fold_moments(
     }
 
 
+def _cached_moments(
+    df: DataFrame,
+    cv,
+    feats: List[str],
+    y_col: str,
+    sample_weight_col: Optional[str],
+    drop_na_in_y: bool,
+    null_rule: str,
+) -> dict:
+    """``_fold_moments`` through the memo. Folds are keyed by exactly
+    what the fan-out join reads — per fold its train periods, test
+    periods and snapshot value, in fold order. Not by the splitter
+    object: ``drop_splits`` renumbers a splitter's folds in place, so an
+    object key would hand the new fold 0 the moments of the dropped one.
+    Not by period ranges: a range spans the splitter's own period list,
+    so two splitters with equal ranges can hold different periods."""
+    folds = tuple(
+        (tuple(f.train_periods), tuple(f.test_periods), f.snapshot_value)
+        for f in cv.spec.folds
+    )
+    key = (
+        cv.period_col,
+        cv.snapshot_col,
+        folds,
+        tuple(feats),
+        y_col,
+        sample_weight_col,
+        bool(drop_na_in_y),
+        null_rule,
+    )
+    with _CACHE_LOCK:
+        per_df = _MOMENT_CACHE.setdefault(df, {})
+        rows = per_df.get(key)
+        if rows is None:
+            rows = per_df[key] = _fold_moments(
+                df, cv, feats, y_col, sample_weight_col, drop_na_in_y,
+                null_rule,
+            )
+    return rows
+
+
 def suffstats_fit(
     estimator: Any,
     df: DataFrame,
@@ -154,25 +189,10 @@ def suffstats_fit(
     if len(feats) > _MAX_FEATURES:
         return None
 
-    rule = _null_rule(estimator)
-    ckey = (
-        tuple(feats),
-        y_col,
-        sample_weight_col,
-        bool(drop_na_in_y),
-        rule,
+    rows = _cached_moments(
+        df, cv, feats, y_col, sample_weight_col, drop_na_in_y,
+        _null_rule(estimator),
     )
-    with _CACHE_LOCK:
-        per_df = _MOMENT_CACHE.setdefault(df, weakref.WeakKeyDictionary())
-        per_cv = per_df.setdefault(cv, {})
-        rows = per_cv.get(ckey)
-        if rows is None:
-            rows = _fold_moments(
-                df, cv, feats, y_col, sample_weight_col,
-                drop_na_in_y, rule,
-            )
-            per_cv[ckey] = rows
-
     return _solve_from_moments(estimator, rows, feats, cv.n_splits)
 
 
@@ -274,45 +294,65 @@ def linear_predict_frame(
     to the broadcast-model pandas apply)."""
     if method != "predict":
         return None
-    if len(fitted_estimators) > _MAX_FOLDS_FOR_EXPR:
+    out = _join_coefs(
+        assigned, [fitted_estimators], feature_cols, by_candidate=False
+    )
+    if out is None:
         return None
-    mean_only = all(type(m) is MeanRegressor for m in fitted_estimators)
-    for m in fitted_estimators:
-        if type(m) is MeanRegressor:
-            if m.mean_ is None:
-                return None
-        elif type(m) in (LinearRegression, Ridge):
-            if m.coef_ is None:
-                return None
-        else:
-            return None
-        if (type(m) is MeanRegressor) != mean_only:
-            return None  # mixed families: keep the generic path
+    joined, pred = out
+    return joined.select(*out_fields, pred.alias(output_col))
 
-    spark = assigned.sparkSession
+
+def _join_coefs(
+    assigned: DataFrame,
+    grid: List[List[Any]],
+    feature_cols: Sequence[str],
+    by_candidate: bool,
+):
+    """Broadcast-join ``assigned`` against the tiny
+    ``(fold_id, __b0, __bs)`` coefficient frame of ``grid`` (per
+    candidate, the fitted models in fold order) and build the linear
+    prediction column over it. A grid sweep keys the frame by
+    ``__cand`` as well (``by_candidate``); a single fit leaves the key
+    out, as a dropped column would stay in the broadcast's scan.
+    Returns ``(joined, prediction)``, or ``None`` when
+    any model is unfitted, outside the closed-form family, or the grid
+    mixes MeanRegressor with linear models (caller keeps the generic
+    path)."""
+    models = [m for ms in grid for m in ms]
+    mean_only = all(type(m) is MeanRegressor for m in models)
+    for m in models:
+        fitted = (
+            m.mean_ is not None
+            if mean_only
+            else type(m) in (LinearRegression, Ridge) and m.coef_ is not None
+        )
+        if not fitted:
+            return None
     rows = []
-    for fid, m in enumerate(fitted_estimators):
-        if mean_only:
-            rows.append((fid, float(m.mean_), []))
-        else:
-            rows.append(
-                (
+    for ci, ms in enumerate(grid):
+        for fid, m in enumerate(ms):
+            row = (
+                (fid, float(m.mean_), [])
+                if mean_only
+                else (
                     fid,
                     float(m.intercept_),
                     [float(b) for b in np.asarray(m.coef_).reshape(-1)],
                 )
             )
-    coefs = spark.createDataFrame(
-        rows, "fold_id int, __b0 double, __bs array<double>"
-    )
-    joined = assigned.join(F.broadcast(coefs), "fold_id")
+            rows.append((ci, *row) if by_candidate else row)
+    schema = "fold_id int, __b0 double, __bs array<double>"
+    if by_candidate:
+        schema = "__cand int, " + schema
+    coefs = assigned.sparkSession.createDataFrame(rows, schema)
     pred: Column = F.col("__b0")
     if not mean_only:
         # MeanRegressor ignores X entirely (NaN features must not
         # poison it), so feature terms are added only for linear models
         for i, c in enumerate(feature_cols):
             pred = pred + F.col("__bs")[i] * F.col(c).cast("double")
-    return joined.select(*out_fields, pred.alias(output_col))
+    return assigned.join(F.broadcast(coefs), "fold_id"), pred
 
 
 def scaler_transform_frame(
@@ -360,8 +400,6 @@ def sweep_scores(
     cv,
     metrics: "dict",
     roles: Sequence[str] = ("test",),
-    sample_weight_col: Optional[str] = None,
-    drop_na_in_y: bool = False,
 ):
     """Score an ENTIRE candidate grid of closed-form estimators in two
     Spark jobs, independent of grid size.
@@ -384,7 +422,7 @@ def sweep_scores(
     is the per-fold score list, or ``None`` if anything falls outside the
     closed-form/SQL-expressible envelope (caller uses the generic path).
     """
-    from .metrics import _SQL_METRICS, metric_agg_expr
+    from .metrics import _SQL_METRICS, metric_agg_expr, r2_aggs
 
     if not estimators or y_col is None:
         return None
@@ -400,69 +438,23 @@ def sweep_scores(
         if key != "r2" and key not in _SQL_METRICS:
             return None
 
-    mean_like = type(est0) is MeanRegressor
     if type(est0) is StandardScaler:
         return None  # transformers have no predict metrics to sweep
-    rule = _null_rule(est0)
-    ckey = (
-        tuple(feats),
-        y_col,
-        sample_weight_col,
-        bool(drop_na_in_y),
-        rule,
+    rows = _cached_moments(
+        df, cv, feats, y_col, None, False, _null_rule(est0)
     )
-    with _CACHE_LOCK:
-        per_df = _MOMENT_CACHE.setdefault(df, weakref.WeakKeyDictionary())
-        per_cv = per_df.setdefault(cv, {})
-        rows = per_cv.get(ckey)
-        if rows is None:
-            rows = _fold_moments(
-                df, cv, feats, y_col, sample_weight_col,
-                drop_na_in_y, rule,
-            )
-            per_cv[ckey] = rows
-
     models_per_cand = [
         _solve_from_moments(e, rows, feats, cv.n_splits)
         for e in estimators
     ]
 
-    crows = []
-    for ci, models in enumerate(models_per_cand):
-        for fid, m in enumerate(models):
-            if mean_like:
-                if m.mean_ is None:
-                    return None
-                crows.append((ci, fid, float(m.mean_), []))
-            else:
-                if m.coef_ is None:
-                    return None
-                crows.append(
-                    (
-                        ci,
-                        fid,
-                        float(m.intercept_),
-                        [float(b) for b in np.asarray(m.coef_).reshape(-1)],
-                    )
-                )
-    spark = df.sparkSession
-    coefs = spark.createDataFrame(
-        crows, "__cand int, fold_id int, __b0 double, __bs array<double>"
-    )
-
-    needed = list(dict.fromkeys(feats + [y_col]))
-    if cv.period_col not in needed:
-        needed.append(cv.period_col)
-    if cv.snapshot_col and cv.snapshot_col not in needed:
-        needed.append(cv.snapshot_col)
-    assigned = cv.assign(df.select(*needed), roles=tuple(roles))
-
-    pred: Column = F.col("__b0")
-    if not mean_like:
-        for i, c in enumerate(feats):
-            pred = pred + F.col("__bs")[i] * F.col(c).cast("double")
+    assigned = cv.assign(df, roles=tuple(roles), cols=feats + [y_col])
+    out = _join_coefs(assigned, models_per_cand, feats, by_candidate=True)
+    if out is None:
+        return None
+    joined, pred = out
     nan = F.lit(float("nan"))
-    base = assigned.join(F.broadcast(coefs), "fold_id").select(
+    base = joined.select(
         "__cand",
         "role",
         "fold_id",
@@ -480,20 +472,13 @@ def sweep_scores(
                 ).alias(f"__m_{mname}")
             )
     if need_r2:
-        aggs += [
-            F.sum((F.col("__y") - F.col("__p")) ** 2).alias("__ss_res"),
-            F.sum(F.col("__y") ** 2).alias("__ss_y2"),
-            F.sum("__y").alias("__s_y"),
-            F.count(F.lit(1)).alias("__n"),
-        ]
-    out = base.groupBy("__cand", "role", "fold_id").agg(*aggs).collect()
-
+        aggs += r2_aggs(F.col("__y"), F.col("__p"))
     scores: dict = {}
-    for r in out:
+    for r in base.groupBy("__cand", "role", "fold_id").agg(*aggs).collect():
         for mname, key in metrics.items():
             if key == "r2":
-                denom = r["__ss_y2"] - r["__s_y"] ** 2 / r["__n"]
-                val = 1.0 - r["__ss_res"] / denom
+                denom = r["ss_y2"] - r["s_y"] ** 2 / r["n"]
+                val = 1.0 - r["ss_res"] / denom
             else:
                 val = r[f"__m_{mname}"]
             scores.setdefault(
@@ -503,11 +488,8 @@ def sweep_scores(
     # rows for a role — a positional list built from only the folds
     # present would silently shift later folds into the wrong
     # split{j} column (ADVICE r01).
-    n_splits = (
-        cv.get_n_splits() if hasattr(cv, "get_n_splits") else cv.n_splits
-    )
     folded = {
-        k: [v.get(f, float("nan")) for f in range(n_splits)]
+        k: [v.get(f, float("nan")) for f in range(cv.n_splits)]
         for k, v in scores.items()
     }
     return models_per_cand, folded

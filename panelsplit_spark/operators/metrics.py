@@ -30,7 +30,6 @@ __all__ = [
     "get_scorer",
     "check_scoring",
     "per_fold_scores",
-    "sql_metric_expr",
     "SCORER_NAMES",
 ]
 
@@ -681,13 +680,17 @@ def metric_agg_expr(name: str, y, p, nan_aware: bool = False):
     return _SQL_METRICS[name](y, p)
 
 
-def sql_metric_expr(name: str, y_col: str, pred_col: str):
-    """Aggregate Column for a SQL-expressible metric, or None if the
-    metric has no single-aggregate form (r2 is decomposed separately in
-    per_fold_scores)."""
-    if name not in _SQL_METRICS:
-        return None
-    return _SQL_METRICS[name](F.col(y_col), F.col(pred_col))
+def r2_aggs(y, p) -> list:
+    """r2 decomposed into one grouped aggregation: Σ(y-p)², Σy², Σy and
+    n as ``ss_res``, ``ss_y2``, ``s_y``, ``n``, from which
+    r2 = 1 - ss_res / (ss_y2 - s_y² / n) — the group mean folds in via
+    sums, so no window is needed."""
+    return [
+        F.sum((y - p) ** 2).alias("ss_res"),
+        F.sum(y**2).alias("ss_y2"),
+        F.sum(y).alias("s_y"),
+        F.count(F.lit(1)).alias("n"),
+    ]
 
 
 def _fastpath_name(metric: Any, metric_kwargs: dict) -> Optional[str]:
@@ -746,13 +749,8 @@ def per_fold_scores(
                 )
                 nanified = True
     if isinstance(metric, str) and metric == "r2":
-        # decomposed algebraically: 1 - Σ(y-p)² / Σ(y-ȳ_g)², with the group
-        # mean folded in via sums — single aggregation, no window
         g = preds.groupBy(fold_col).agg(
-            F.sum((F.col(y_col) - F.col(pred_col)) ** 2).alias("ss_res"),
-            F.sum(F.col(y_col) ** 2).alias("ss_y2"),
-            F.sum(F.col(y_col)).alias("s_y"),
-            F.count(F.lit(1)).alias("n"),
+            *r2_aggs(F.col(y_col), F.col(pred_col))
         )
         return g.select(
             fold_col,

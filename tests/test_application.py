@@ -432,3 +432,113 @@ def test_oof_target_encode_matches_hand_computation(spark):
                 # category unseen in THIS fold's train window must
                 # collapse to the fold's global prior
                 assert got[(rid_, f)] == pytest.approx(gm, abs=1e-9)
+
+
+def test_moment_memo_follows_folds_after_drop_splits(spark):
+    """``drop_splits`` renumbers a splitter's folds in place; a refit on
+    the same (df, cv) must fit the NEW folds, not replay the memoized
+    moments of the folds they replaced. y is constant in periods 1-3, so
+    fold 0 (train 1-3) is dropped and the old fold 1 becomes fold 0."""
+    from panelsplit_spark import drop_splits
+
+    rows = [
+        (float(k), p, 5.0 if p <= 3 else 0.5 * k + p + 0.1 * (k % 3))
+        for p in range(1, 7)
+        for k in range(10)
+    ]
+    schema = "x double, period int, y double"
+    df = spark.createDataFrame(rows, schema)
+    ps = PanelSplit(df, "period", n_splits=3)
+    before = cross_val_fit(LinearRegression(), df, ["x"], "y", ps)
+    assert before[0].intercept_ == pytest.approx(5.0)
+    assert before[0].coef_[0] == pytest.approx(0.0, abs=1e-9)
+
+    drop_splits(ps, df, "y")
+    assert ps.n_splits == 2
+    after = cross_val_fit(LinearRegression(), df, ["x"], "y", ps)
+    cold = cross_val_fit(
+        LinearRegression(), spark.createDataFrame(rows, schema), ["x"], "y",
+        ps,
+    )
+    assert len(after) == len(cold) == 2
+    for a, c in zip(after, cold):
+        assert a.intercept_ == pytest.approx(c.intercept_, abs=1e-12)
+        assert a.coef_[0] == pytest.approx(c.coef_[0], abs=1e-12)
+    assert after[0].intercept_ != pytest.approx(5.0)
+
+
+def test_linear_predict_frame_beyond_64_folds(spark):
+    """The closed-form predict joins coefficients as a frame, so nothing
+    in it grows with the fold count: a 70-fold splitter stays on the
+    coefficient-join path and matches the grouped-pandas path."""
+    import numpy as np
+
+    from panelsplit_spark.operators.linear_fastpath import (
+        linear_predict_frame,
+    )
+
+    rows = [
+        (p * 3 + k, float((p * 7 + k * 5) % 11), p,
+         1.0 + 2.0 * ((p * 7 + k * 5) % 11) + 0.01 * p + 0.1 * (k % 2))
+        for p in range(72)
+        for k in range(3)
+    ]
+    df = spark.createDataFrame(rows, "rid int, x1 double, period int, y double")
+    ps = PanelSplit(df, "period", n_splits=70)
+    models = cross_val_fit(_FastLinearRegression(), df, ["x1"], "y", ps)
+    assert len(models) == 70
+    frame = linear_predict_frame(
+        ps.assign(df, roles=("test",), cols=["rid", "x1"]), models, ["x1"],
+        "predict", ["rid", "fold_id"], "prediction",
+    )
+    assert frame is not None
+
+    fast, _ = cross_val_fit_predict(
+        _FastLinearRegression(), df, ["x1"], "y", ps, keep_cols=["rid"]
+    )
+    slow, _ = cross_val_fit_predict(
+        SlowLinearRegression(), df, ["x1"], "y", ps, keep_cols=["rid"]
+    )
+    got = {(r["rid"], r["fold_id"]): r["prediction"] for r in fast.collect()}
+    want = {(r["rid"], r["fold_id"]): r["prediction"] for r in slow.collect()}
+    direct = {
+        (r["rid"], r["fold_id"]): r["prediction"] for r in frame.collect()
+    }
+    assert len(want) == 70 * 3
+    assert got.keys() == want.keys() == direct.keys()
+    keys = sorted(want)
+    assert np.allclose(
+        [got[k] for k in keys], [want[k] for k in keys], rtol=0, atol=1e-8
+    )
+    assert np.allclose(
+        [direct[k] for k in keys], [want[k] for k in keys], rtol=0,
+        atol=1e-8,
+    )
+
+
+def test_moment_memo_tells_apart_equal_ranges_over_different_periods(spark):
+    """A period range spans its splitter's own period list, so train
+    {1, 3} out of [1, 3, 4] and train {1, 2, 3} out of [1, 2, 3, 4] are
+    both the range (1, 3). Fitting both on the same df must give each
+    its own moments: the second fit counts period 2."""
+    rows = [
+        (float(k), p, 2.0 * k + (10.0 if p == 2 else 0.0))
+        for p in range(1, 5)
+        for k in range(5)
+    ]
+    schema = "x double, period int, y double"
+    df = spark.createDataFrame(rows, schema)
+    gap = PanelSplit.from_folds([([1, 3], [4])], period_col="period")
+    full = PanelSplit.from_folds([([1, 2, 3], [4])], period_col="period")
+    assert gap.spec.folds[0].train_ranges == full.spec.folds[0].train_ranges
+
+    first = cross_val_fit(LinearRegression(), df, ["x"], "y", gap)
+    assert first[0].intercept_ == pytest.approx(0.0, abs=1e-9)
+    second = cross_val_fit(LinearRegression(), df, ["x"], "y", full)
+    cold = cross_val_fit(
+        LinearRegression(), spark.createDataFrame(rows, schema), ["x"], "y",
+        full,
+    )
+    assert second[0].intercept_ == pytest.approx(10.0 / 3.0)
+    assert second[0].intercept_ == pytest.approx(cold[0].intercept_, abs=1e-12)
+    assert second[0].coef_[0] == pytest.approx(cold[0].coef_[0], abs=1e-12)

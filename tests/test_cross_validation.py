@@ -231,3 +231,13 @@ def test_cv_cache_is_per_session_object(spark):
     assert all(k is not None for k in _CV_CACHE.keys())
     del s3
     _CV_CACHE.clear()
+
+
+def test_from_folds_takes_no_snapshot_col():
+    """Literal folds carry no snapshot value, so a snapshot column would
+    compare every row against NULL and empty every fold; the option is
+    refused instead."""
+    with pytest.raises(TypeError):
+        PanelSplit.from_folds([([1], [2])], "period", snapshot_col="snap")
+    ps = PanelSplit.from_folds([([1], [2])], "period")
+    assert ps.snapshot_col is None
